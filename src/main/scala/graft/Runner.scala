@@ -2,6 +2,7 @@ package graft
 
 import graft.config.DatasetConfig
 import graft.pipeline.{DatasetScheduler, IngestionPipeline}
+import graft.plans.GraftExtensions
 import org.apache.spark.sql.SparkSession
 
 import java.time.{ZonedDateTime, ZoneOffset}
@@ -24,16 +25,24 @@ import scala.jdk.CollectionConverters._
   */
 object Runner {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    try execute(args, spark) finally spark.stop()
+  }
+
+  /** The service's session: `cpus` task slots and shuffle partitions, with
+    * [[GraftExtensions]] — the SQL functions a dataset's raw SQL may call, and
+    * the local filesystem its outputs land through. */
+  def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try execute(args, spark) finally spark.stop()
+    spark
   }
 
   /** Testable body (the shared test session must survive, so `main` owns the

@@ -295,8 +295,9 @@ object IngestionPipeline {
     stage("Compaction", Severity.Critical) { ctx =>
       val m = ctx.config.maintenance
       require(m.compactDir.nonEmpty, "maintenance mode needs compactDir")
+      // absolute as a Hadoop path: a URI (file:/…, abfss://…) counts too
       val dir =
-        if (new java.io.File(m.compactDir).isAbsolute) m.compactDir
+        if (new org.apache.hadoop.fs.Path(m.compactDir).isAbsolute) m.compactDir
         else s"$destDir/${m.compactDir}"
       val res = graft.sinks.ParquetSink.compact(spark, dir, m.targetFileBytes,
         ctx.config.parquet.compressionCodec)

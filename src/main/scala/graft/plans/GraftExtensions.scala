@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.functions.HashExpressions._
+import graft.sinks.LocalFs
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
@@ -21,12 +22,21 @@ import org.apache.spark.sql.types.IntegerType
   * `spark.sql.extensions=graft.plans.GraftExtensions`. This is the brief's
   * extension ladder rung (c): analyzer-level registration, not a UDF — the
   * functions resolve to the same expressions the DataFrame API uses, with
-  * identical performance. */
+  * identical performance.
+  *
+  * It also routes the session's `file:` paths through [[graft.sinks.LocalFs]],
+  * Hadoop's local filesystem without a child process per permission or link
+  * call. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
     // auto-rewrite non-equi range joins to the binned equi-join form
     ext.injectOptimizerRule(_ => RangeJoinRewrite)
+    // file: paths land through graft.sinks.LocalFs. A session builds its
+    // parser with its state: after its SparkContext exists (withExtensions
+    // runs before that) and before it first lists or writes a file. So the
+    // parser hook installs the filesystem and returns the parser unchanged.
+    ext.injectParser { (session, parser) => LocalFs.install(session); parser }
   }
 }
 
@@ -44,8 +54,7 @@ object GraftExtensions {
       new ExpressionInfo(classOf[GraftExtensions].getName, name, usage),
       builder)
 
-  /** The registrations, exposed as data so tests (and embedders that already
-    * hold a session) can install them into a live `FunctionRegistry`. */
+  /** The SQL functions [[GraftExtensions]] registers. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
     fn("word_shingles",
       "word_shingles(text, n) - lowercase word n-grams of text",
@@ -73,11 +82,4 @@ object GraftExtensions {
       "top_k_rows(struct, k) - k largest struct rows per group (heap, map-side combine)",
       args => graft.functions.SketchAggregates.TopKRows(
         args(0), intArg(args(1), "top_k_rows", 1))))
-
-  /** Install into an already-built session (builder-time `withExtensions` is
-    * unavailable once a session exists). */
-  def installInto(spark: org.apache.spark.sql.SparkSession): Unit =
-    functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 class ExtensionsSpec extends SparkSpec {
 
   test("injected SQL functions resolve to the compiled expressions") {
-    GraftExtensions.installInto(spark)
     sources.Lake.registerAll(spark, sf0001)
 
     val viaSql = spark.sql(
@@ -27,7 +26,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("set intersection and dot product work from SQL; bad arity/args fail loudly") {
-    GraftExtensions.installInto(spark)
     val n = spark.sql(
       """SELECT sorted_intersect_count(hashed_sorted_set(array('a','b','c')),
         |                              hashed_sorted_set(array('b','c','d'))) AS n""".stripMargin)
@@ -44,7 +42,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("bottom_k aggregate: exact k smallest distinct values, from SQL and API") {
-    GraftExtensions.installInto(spark)
     import spark.implicits._
     val df = Seq("m", "c", "a", "z", "c", "b", "a", "q").toDF("v")
     df.createOrReplaceTempView("bk_in")
@@ -68,7 +65,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("top_k_rows aggregate equals the window formulation; plans with partial agg") {
-    GraftExtensions.installInto(spark)
     import spark.implicits._
     val df = (1L to 500L).map(i => (s"g${i % 3}", (i * 7919) % 101, i))
       .toDF("g", "score", "id").repartition(7)

@@ -205,6 +205,24 @@ class PipelineSpec extends SparkSpec {
     assert(ctx.ctl.exists(_.checksum == expected.checksum))
   }
 
+  test("a compactDir given as a file: URI is compacted in place, not under destDir") {
+    val dest = graft.util.Scratch.dir("graft-pipe-compact-uri").toString
+    val tbl = s"$dest/uri_tbl"
+    (0 until 3).foreach { i =>
+      spark.range(i * 100L, i * 100L + 100L).toDF("id").repartition(2).write.mode("append").parquet(tbl)
+    }
+    val cfg = DatasetConfig(datasetId = "compact-uri",
+      maintenance = graft.config.MaintenanceConfig(enabled = true, compactDir = s"file:$tbl"))
+    val ctx = IngestionPipeline.run(spark, cfg, sf0001, s"$dest/elsewhere", now = now)
+    assert(!ctx.failed, ctx.errors.mkString("; "))
+    val fs = new Path(tbl).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(graft.sinks.ParquetSink.listPartFiles(fs, new Path(tbl)).size == 1)
+    assert(spark.read.parquet(tbl).count() == 300L)
+    assert(ctx.ctl.exists(_.recordCount == 300L))
+    assert(new java.io.File(dest, "uri_tbl.ctl").exists())
+    assert(!new java.io.File(s"$dest/elsewhere").exists())
+  }
+
   test("environment gating skips non-matching transforms end to end") {
     val dest = graft.util.Scratch.dir("graft-pipe-env").toString
     val cfg = tradesConfig.copy(transformations = Seq(

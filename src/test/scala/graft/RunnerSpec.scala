@@ -6,6 +6,23 @@ import java.nio.file.Files
   * datasets directory, including a JDBC dataset wired through `--connections`. */
 class RunnerSpec extends SparkSpec {
 
+  test("the session Runner builds resolves the library's SQL functions") {
+    val shared = spark
+    // getOrCreate builds a new session, over the running SparkContext, only
+    // when no default or active session exists
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val own = Runner.session("2")
+      assert(own ne shared)
+      val sig = own.sql("SELECT minhash_sig(array('a', 'b', 'c'), 4) AS sig").head().getSeq[Long](0)
+      assert(sig.size == 4)
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(shared)
+      org.apache.spark.sql.SparkSession.setActiveSession(shared)
+    }
+  }
+
   test("--once runs every enabled dataset: lake query + JDBC source via --connections") {
     // stage a Derby table for the JDBC dataset
     val conn = java.sql.DriverManager.getConnection("jdbc:derby:memory:runnerdb;create=true")

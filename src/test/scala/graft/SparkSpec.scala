@@ -16,6 +16,9 @@ object SparkSpec {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      // as Runner does: every spec lands files through graft.sinks.LocalFs
+      // whatever order the suites run in
+      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
